@@ -266,16 +266,15 @@ object CurationPipeline {
                              funnel: Array[Long], resumedBuckets: Int)
 
   /**
-   * Checkpoint-resumable curation run (ExtractPipeline's commit-group +
-   * lineage shape, §5.3): the curated output is bucketed on a hash of the id
-   * and written per commit group with dynamic partition overwrite, each group
-   * immediately followed by its lineage append — the durable checkpoint unit.
-   * A rerun over the same outDir reads the lineage, skips committed buckets
-   * (their directories are untouched), and recomputes only the rest; because
-   * every stage is deterministic (windows keyed on content hashes, splitmix
-   * sampling, min-id keepers), a resumed run's bytes equal an uninterrupted
-   * run's (CurationPipelineSpec pins this). The flag/plan recompute on resume
-   * is the same trade ExtractPipeline makes: lineage rows are the checkpoint,
+   * Checkpoint-resumable curation run (BucketCommit's commit groups +
+   * lineage, §5.3): the curated output is bucketed on a hash of the id and
+   * committed per fixed group; lineage rows key on "id\tsha256(text)". A
+   * rerun over the same outDir skips committed buckets (their directories
+   * are untouched) and recomputes only the rest; because every stage is
+   * deterministic (windows keyed on content hashes, splitmix sampling,
+   * min-id keepers), a resumed run's bytes equal an uninterrupted run's
+   * (CurationPipelineSpec pins this). The flag/plan recompute on resume is
+   * the same trade ExtractPipeline makes: lineage rows are the checkpoint,
    * not Spark shuffle state.
    */
   def runJob(spark: org.apache.spark.sql.SparkSession, docs: DataFrame, outDir: String,
@@ -287,48 +286,15 @@ object CurationPipeline {
              failAfterGroups: Option[Int] = None): JobResult = {
     val curatedPath = s"$outDir/curated"
     val lineagePath = s"$outDir/lineage"
-    val doneBuckets: Array[Int] =
-      if (ExtractPipeline.fsExists(spark, lineagePath))
-        ExtractPipeline.readLineage(spark, lineagePath)
-          .filter(col("status") === "committed")
-          .select(col("bucket")).distinct().collect().map(_.getInt(0))
-      else Array.empty[Int]
-
+    val done = BucketCommit.doneBuckets(spark, lineagePath)
     val r = run(docs, textCol, idCol, urlCol, hostCapK, samplePct, gates)
-    val bucketed = r.curated.withColumn("bucket",
-      pmod(xxhash64(col(idCol)), lit(nBuckets)).cast("int"))
-
-    val todo = (0 until nBuckets).filterNot(doneBuckets.toSet)
-    val groups: Seq[Seq[Int]] =
-      if (commitGroups <= 1 || todo.isEmpty) Seq(todo)
-      else todo.grouped(math.max(1, math.ceil(todo.size.toDouble / commitGroups).toInt)).toSeq
-    var committed = 0
-    groups.filter(_.nonEmpty).foreach { group =>
-      bucketed.filter(col("bucket").isin(group: _*))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(curatedPath)
-      // lineage from the WRITTEN files — fingerprint what landed, not the plan
-      val written = spark.read.parquet(curatedPath).filter(col("bucket").isin(group: _*))
-      written.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("row_count"),
-          sha2(encode(concat_ws("\n", sort_array(collect_list(
-            concat_ws("\t", col(idCol).cast("string"),
-              sha2(encode(col(textCol), "UTF-8"), 256))))), "UTF-8"), 256).as("digest"))
-        .select(lit(runId).as("run_id"), col("bucket"), col("row_count"), col("digest"),
-          lit("committed").as("status"),
-          lit(System.currentTimeMillis()).as("committed_utc_ms"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(lineagePath)
-      committed += 1
-      failAfterGroups.foreach { k =>
-        if (committed >= k && committed < groups.size)
-          throw new IllegalStateException(s"injected failure after $committed commit group(s)")
-      }
-    }
+    BucketCommit.commit(
+      r.curated.withColumn(BucketCommit.BucketCol, BucketCommit.bucketOf(col(idCol), nBuckets)),
+      curatedPath, lineagePath, runId, nBuckets, commitGroups, done,
+      rowKey = concat_ws("\t", col(idCol).cast("string"), sha2(encode(col(textCol), "UTF-8"), 256)),
+      failAfterGroups = failAfterGroups)
     JobResult(curatedPath, lineagePath,
       r.funnel.collect().head.toSeq.map(_.asInstanceOf[Long]).toArray,
-      doneBuckets.length)
+      done.size)
   }
 }

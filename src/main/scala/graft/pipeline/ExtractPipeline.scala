@@ -38,9 +38,6 @@ object ExtractPipeline {
       commitGroups: Int = 1, // >1 ⇒ buckets committed in batches (finer mid-job checkpoints, more input scans)
       failAfterGroups: Option[Int] = None, // test hook: inject a crash after N group commits
       maxRowsPerRun: Long = 0L, // B11 batch cap (config.py:56): >0 ⇒ audit-flag oversized runs
-      parquetCodec: String = "zstd", // payload-table compression: zstd ≈ 25-30% smaller than
-      // snappy on extracted text at comparable scan speed — at the 100 TB tier
-      // that is tens of TB of storage and shuffle-read bandwidth
       decryptPdfs: Boolean = false // attempt empty-user-password recovery (PdfCrypto, RC4
       // standard handler) BEFORE validation: recovered files extract like clear
       // PDFs; genuinely password-protected ones still quarantine. Off by default
@@ -95,10 +92,10 @@ object ExtractPipeline {
       .otherwise("low")
   }
 
-  val BucketCol = "bucket"
+  val BucketCol = BucketCommit.BucketCol
 
   def withBucket(df: DataFrame, nBuckets: Int): DataFrame =
-    df.withColumn(BucketCol, pmod(xxhash64(col("url")), lit(nBuckets)).cast("int"))
+    df.withColumn(BucketCol, BucketCommit.bucketOf(col("url"), nBuckets))
 
   /** Split input into (valid, quarantine). */
   def validate(pages: DataFrame, cfg: Config): (DataFrame, DataFrame) = {
@@ -180,41 +177,9 @@ object ExtractPipeline {
       lit(0).as("n_spans"),
       lit(1).as("n_pages"))
 
-  /** Per-bucket lineage from the *written* output: stable under reruns.
-    * digest = sha256 of the '\n'-joined, url-sorted per-row text digests —
-    * the bucket-level golden fingerprint (FIXTURES.md §4). */
-  def lineage(extracted: DataFrame, runId: String): DataFrame =
-    extracted
-      .groupBy(col(BucketCol))
-      .agg(
-        count(lit(1)).as("row_count"),
-        sum(when(col("status") === "extracted", 1L).otherwise(0L)).as("ok_count"),
-        sum(when(col("status") === "skipped", 1L).otherwise(0L)).as("skipped_count"),
-        sum(when(col("status") === "error", 1L).otherwise(0L)).as("err_count"),
-        sha2(encode(concat_ws("\n",
-          sort_array(collect_list(concat_ws("\t", col("url"), col("text_sha256"))))), "UTF-8"), 256)
-          .as("digest"))
-      .select(
-        lit(runId).as("run_id"), col(BucketCol), col("row_count"),
-        col("ok_count"), col("skipped_count"), col("err_count"), col("digest"),
-        lit("committed").as("status"),
-        // monotonic commit stamp: "latest lineage per bucket" orders by this,
-        // never by run_id strings ('run-10' sorts before 'run-2' lexically)
-        lit(System.currentTimeMillis()).as("committed_utc_ms"))
-
-  /** Lineage log reader tolerant of rows written by older engine versions:
-    * `committed_utc_ms` and `err_count` were added after the first release, so
-    * an outDir whose log predates them must still resume/compact — mergeSchema
-    * unions the file schemas and missing values default to 0 (epoch-0 commit
-    * stamps sort OLDEST, so any re-run supersedes a legacy row, which is the
-    * correct resume semantics for rows that predate the stamp). */
-  def readLineage(spark: SparkSession, lineagePath: String): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(lineagePath)
-    def defaulted(df: DataFrame, c: String): DataFrame =
-      if (df.columns.contains(c)) df.withColumn(c, coalesce(col(c), lit(0L)))
-      else df.withColumn(c, lit(0L))
-    defaulted(defaulted(raw, "committed_utc_ms"), "err_count")
-  }
+  /** The lineage log of a run's outDir (BucketCommit's format and reader). */
+  def readLineage(spark: SparkSession, lineagePath: String): DataFrame =
+    BucketCommit.readLineage(spark, lineagePath)
 
   final case class RunResult(
       extractedPath: String,
@@ -237,7 +202,7 @@ object ExtractPipeline {
    *   quarantine/...parquet
    *
    * Resume: buckets already present in lineage (status=committed) are
-   * anti-joined away (reference archive-dedup anti-join shape,
+   * filtered away (reference archive-dedup anti-join analog,
    * ocr_combined.py:147-157); their output dirs are left untouched, so an
    * interrupted run recomputes only missing buckets (FIXTURES.md invariant 4).
    */
@@ -295,120 +260,80 @@ object ExtractPipeline {
             "process in smaller runs or raise the cap")
     }
 
-    recoverLineageSwap(spark, outDir) // finish any interrupted retention swap
-    // resume: buckets with committed lineage are done — gate every sink on them.
-    // The done list is at most nBuckets entries (driver-safe); a NOT-isin filter
-    // lets the parquet reader prune done bucket directories outright, which a
-    // left_anti join would not (no static partition pruning through joins).
-    val doneBucketIds: Array[Int] =
-      if (fsExists(spark, lineagePath))
-        readLineage(spark, lineagePath).filter(col("status") === "committed")
-          .select(col(BucketCol)).distinct().collect().map(_.getInt(0))
-      else Array.empty[Int]
-    val nDone = doneBucketIds.length
-    if (nDone > 0)
-      audit("resume", "info", s"$nDone bucket(s) already committed; recomputing only the rest")
-    def notDone(df: DataFrame): DataFrame =
-      if (nDone > 0) df.filter(!col(BucketCol).isin(doneBucketIds.toSeq: _*)) else df
+    // resume: buckets with committed lineage are done — gate every sink on
+    // them. The done list is at most nBuckets entries, so the gates are isin
+    // filters, which push below the extraction projection (PlanAuditSpec):
+    // done buckets are never re-extracted
+    val done = BucketCommit.doneBuckets(spark, lineagePath)
+    if (done.nonEmpty)
+      audit("resume", "info", s"${done.size} bucket(s) already committed; recomputing only the rest")
 
     val (valid, quarantine) = validate(pages, cfg)
-    // dynamic partition overwrite keyed by bucket ⇒ reruns are idempotent per
-    // bucket (exactly-once resume without a transactional catalog; the honest
-    // Iceberg-snapshot substitution, SURVEY.md §7.0)
-    notDone(quarantine).write
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", cfg.parquetCodec)
-      .mode(SaveMode.Overwrite)
-      .partitionBy(BucketCol)
-      .parquet(quarantinePath)
+    if ((0 until cfg.nBuckets).exists(b => !done(b)))
+      BucketCommit.overwrite(
+        if (done.isEmpty) quarantine else quarantine.filter(!col(BucketCol).isin(done.toSeq: _*)),
+        quarantinePath)
 
     val (toProcess0, skipped) = modeFilter(valid, cfg.mode)
     val all = extract(toProcess0, cfg).unionByName(passThroughSkipped(skipped, cfg))
-    val todo = notDone(all)
 
-    // Commit groups: the not-done buckets are processed in `commitGroups` batches,
-    // each batch's output write followed immediately by its lineage append — the
-    // checkpoint unit of a mid-job failure. A run killed between group commits
-    // resumes with only the uncommitted groups recomputed (north rule:
-    // checkpoint-resume of failed partitions without recomputation).
-    // Trade-off: G groups ⇒ G input scans (the bucket filter prunes extraction,
-    // not the scan); at the 100 TB tier pick G so a group is O(1-4 TB).
-    val todoBuckets = (0 until cfg.nBuckets).filterNot(doneBucketIds.toSet)
-    val groups: Seq[Seq[Int]] =
-      if (cfg.commitGroups <= 1 || todoBuckets.isEmpty) Seq(todoBuckets)
-      else {
-        val per = math.max(1, math.ceil(todoBuckets.size.toDouble / cfg.commitGroups).toInt)
-        todoBuckets.grouped(per).toSeq
-      }
-    var committed = 0
-    groups.filter(_.nonEmpty).foreach { group =>
-      val part =
-        if (groups.size == 1) todo
-        else todo.filter(col(BucketCol).isin(group: _*))
+    // Commit groups: the checkpoint unit of a mid-job failure. A run killed
+    // between group commits resumes with only the uncommitted groups
+    // recomputed (north rule: checkpoint-resume of failed partitions without
+    // recomputation). Trade-off: G groups ⇒ G input scans (the bucket filter
+    // prunes extraction, not the scan); at the 100 TB tier pick G so a group
+    // is O(1-4 TB). Lineage digest = sha256 of the url-sorted
+    // "url\ttext_sha256" lines — the bucket-level golden fingerprint
+    // (FIXTURES.md §4).
+    def countOf(status: String) = sum(when(col("status") === status, 1L).otherwise(0L))
+    BucketCommit.commit(all, extractedPath, lineagePath, cfg.runId,
+      cfg.nBuckets, cfg.commitGroups, done,
+      rowKey = concat_ws("\t", col("url"), col("text_sha256")),
+      counts = Seq("ok_count" -> countOf("extracted"), "skipped_count" -> countOf("skipped"),
+        "err_count" -> countOf("error")),
       // range-partitioned write (north rule): physical partitions are contiguous
       // (bucket, url) ranges, so each bucket dir holds url-sorted files — url
       // point/prefix reads touch one file, and parquet min/max url stats prune
-      part.repartitionByRange(col(BucketCol), col("url"))
-        .sortWithinPartitions(col(BucketCol), col("url"))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", cfg.parquetCodec)
-        .mode(SaveMode.Overwrite)
-        .partitionBy(BucketCol)
-        .parquet(extractedPath)
-      // lineage from the written files (read-back guarantees we fingerprint what
-      // landed); isin on the partition column prunes other bucket dirs from the scan
-      val written = spark.read.parquet(extractedPath)
-        .filter(col(BucketCol).isin(group: _*))
-      lineage(written, cfg.runId).write.mode(SaveMode.Append).parquet(lineagePath)
-      committed += 1
-      audit("group_commit", "info",
-        s"group $committed/${groups.size}: buckets ${group.min}..${group.max} (${group.size})")
-      flushAudit() // durability point: committed groups' audit rows survive a crash
-      cfg.failAfterGroups.foreach { k =>
-        if (committed >= k && committed < groups.size)
-          throw new IllegalStateException(s"injected failure after $committed commit group(s)")
-      }
-    }
+      layout = _.repartitionByRange(col(BucketCol), col("url"))
+        .sortWithinPartitions(col(BucketCol), col("url")),
+      failAfterGroups = cfg.failAfterGroups,
+      onGroup = (k, n, group) => {
+        audit("group_commit", "info",
+          s"group $k/$n: buckets ${group.min}..${group.max} (${group.size})")
+        flushAudit() // durability point: committed groups' audit rows survive a crash
+      })
 
-    // snapshot manifest over ALL committed buckets (Iceberg-emulation commit record)
-    val allLineage = readLineage(spark, lineagePath)
-      .filter(col("status") === "committed")
-      .groupBy(col(BucketCol))
-      .agg(max(struct(col("committed_utc_ms"), col("run_id"), col("row_count"), col("digest"))).as("latest"))
-      .select(col(BucketCol), col("latest.row_count"), col("latest.digest"))
+    // one lineage read feeds the snapshot manifest over ALL committed buckets
+    // (Iceberg-emulation commit record) and the counters (metadata-sized,
+    // never a rescan of the output)
+    val latest = BucketCommit.latestCommitted(spark, lineagePath)
+      .select(col(BucketCol), col("row_count"), col("digest"),
+        col("ok_count"), col("skipped_count"), col("err_count"))
       .collect()
     // next id = numeric successor of the LATEST snapshot, never the manifest
     // COUNT — after retention expiry the count shrinks and a count-derived id
     // would sort before kept snapshots, breaking the lexicographic-commit-order
     // contract (latestSnapshot would resolve to a stale run)
-    val nextSeq = CatalogIO.latestSnapshot(spark, extractedPath)
+    val parent = CatalogIO.latestSnapshot(spark, extractedPath)
+    val nextSeq = parent
       .flatMap(id => """snap-(\d+)""".r.findFirstMatchIn(id).map(_.group(1).toInt + 1))
       .getOrElse(0)
     val snapshotId = f"snap-$nextSeq%06d-${cfg.runId}"
     CatalogIO.writeSnapshot(spark, extractedPath, CatalogIO.Snapshot(
       snapshotId = snapshotId,
       runId = cfg.runId,
-      parent = CatalogIO.latestSnapshot(spark, extractedPath).getOrElse(""),
+      parent = parent.getOrElse(""),
       createdUtcMs = System.currentTimeMillis(),
-      buckets = allLineage.map(r =>
+      buckets = latest.map(r =>
         CatalogIO.BucketEntry(r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sortBy(_.bucket)))
 
-    // counters come from lineage (metadata-sized), never a rescan of the output
-    val linSums = readLineage(spark, lineagePath)
-      .filter(col("status") === "committed")
-      .groupBy(col(BucketCol))
-      .agg(max(struct(col("committed_utc_ms"), col("run_id"),
-        col("ok_count"), col("skipped_count"), col("err_count"))).as("l"))
-      .agg(sum(col("l.ok_count")), sum(col("l.skipped_count")), sum(col("l.err_count"))).collect()(0)
-    val nExtracted = if (linSums.isNullAt(0)) 0L else linSums.getLong(0)
-    val nSkipped = if (linSums.isNullAt(1)) 0L else linSums.getLong(1)
-    val nErrors = if (linSums.isNullAt(2)) 0L else linSums.getLong(2)
-    val q = try spark.read.parquet(quarantinePath).count() catch { case _: Exception => 0L }
+    val nExtracted = latest.map(_.getLong(3)).sum
+    val nSkipped = latest.map(_.getLong(4)).sum
+    val nErrors = latest.map(_.getLong(5)).sum
+    val q = spark.read.schema(quarantine.schema).parquet(quarantinePath).count()
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     // jobs table row (reference OCRJob analog, database_manager.py:42-84)
-    import spark.implicits._
     val totalRows = nExtracted + nSkipped + nErrors + q
     Seq(graft.model.JobRow(
       run_id = cfg.runId, mode = cfg.mode,
@@ -433,73 +358,24 @@ object ExtractPipeline {
       skipped = nSkipped,
       errors = nErrors,
       quarantined = q,
-      resumedBuckets = nDone,
+      resumedBuckets = done.size,
       snapshotId = snapshotId)
   }
 
   /**
    * Retention job (F5, reference cleanup database_manager.py:537-568): expire
    * all but the newest `keepSnapshots` snapshot manifests and compact the
-   * lineage log to the latest committed row per bucket. Resume semantics are
-   * preserved exactly — resume reads only committed buckets' latest state,
-   * which compaction keeps. The compacted lineage is written to a temp dir
-   * and swapped in with renames so a crash leaves either the old or the new
-   * log, never a partial one.
+   * lineage log to the latest committed row per bucket
+   * (BucketCommit.compactLineage — crash-safe, resume semantics kept).
    */
   def retention(spark: SparkSession, outDir: String, keepSnapshots: Int = 3): Unit = {
-    val lineagePath = s"$outDir/lineage"
-    recoverLineageSwap(spark, outDir) // finish any interrupted prior swap first
     CatalogIO.expireSnapshots(spark, s"$outDir/extracted", keepSnapshots)
-    if (!fsExists(spark, lineagePath)) return
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(BucketCol))
-      .orderBy(col("committed_utc_ms").desc, col("run_id").desc)
-    val latest = readLineage(spark, lineagePath)
-      .filter(col("status") === "committed")
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-    val tmpPath = s"$outDir/lineage_compact_tmp"
-    latest.write.mode(SaveMode.Overwrite).parquet(tmpPath)
-    val hPath = new org.apache.hadoop.fs.Path(lineagePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"$outDir/lineage_old_tmp")
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a prior crash
-    // rename returns false on failure (it does not throw): an unchecked promote
-    // followed by the old-dir delete would destroy the only lineage copy
-    if (!fs.rename(hPath, old))
-      throw new IllegalStateException(s"retention: could not move $hPath aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmpPath), hPath)) {
-      fs.rename(old, hPath) // restore the original before failing
-      throw new IllegalStateException("retention: compacted-lineage promote failed; original restored")
-    }
-    fs.delete(old, true)
-  }
-
-  /** The swap above is two renames, not one atomic op: a crash between them
-    * leaves NO live lineage (resume would silently recompute everything).
-    * Every lineage reader path first completes an interrupted swap from the
-    * surviving tmp dirs — the swap is RECOVERABLE rather than atomic. */
-  private def recoverLineageSwap(spark: SparkSession, outDir: String): Unit = {
-    val lineage = new org.apache.hadoop.fs.Path(s"$outDir/lineage")
-    val fs = lineage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val compactTmp = new org.apache.hadoop.fs.Path(s"$outDir/lineage_compact_tmp")
-    val oldTmp = new org.apache.hadoop.fs.Path(s"$outDir/lineage_old_tmp")
-    if (!fs.exists(lineage)) {
-      // died between the renames: the compacted (preferred) or original log
-      // is sitting in a tmp dir — promote it
-      if (fs.exists(compactTmp)) fs.rename(compactTmp, lineage)
-      else if (fs.exists(oldTmp)) fs.rename(oldTmp, lineage)
-    }
-    if (fs.exists(lineage)) {
-      if (fs.exists(oldTmp)) fs.delete(oldTmp, true)
-      if (fs.exists(compactTmp)) fs.delete(compactTmp, true)
-    }
+    BucketCommit.compactLineage(spark, s"$outDir/lineage")
   }
 
   /** Per-run rollup joining jobs to lineage (reference job_summary view,
     * docker/init.sql:28-49): run_id, mode, totals, buckets committed. */
   def jobSummary(spark: SparkSession, outDir: String): DataFrame = {
-    recoverLineageSwap(spark, outDir) // every lineage reader completes an interrupted swap
     val jobs = spark.read.parquet(s"$outDir/jobs")
     val lin = readLineage(spark, s"$outDir/lineage")
       .groupBy(col("run_id"))
@@ -514,10 +390,5 @@ object ExtractPipeline {
       .select(col("run_id"), col("mode"), col("total_rows"), col("extracted"),
         col("skipped"), col("errors"), col("quarantined"), col("buckets_committed"),
         col("lineage_rows"), col("docs_per_sec"), col("status"))
-  }
-
-  private[graft] def fsExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

@@ -58,7 +58,7 @@ object RunFrontier {
       "discovered_from STRING, politeness_key BIGINT, bucket INT"
     val seenDirs = (0 until round)
       .map(r => s"$outDir/round-$r/frontier")
-      .filter(graft.pipeline.ExtractPipeline.fsExists(spark, _))
+      .filter(graft.pipeline.BucketCommit.exists(spark, _))
     val seen =
       if (seenDirs.isEmpty) None
       else Some(seenDirs.map(d =>

@@ -129,7 +129,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
       stages.set(0)
       val got = GraphOps.pageRank(e, "src", "dst", iters = 25, convergeDelta = delta)
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      Thread.sleep(500) // listener bus drain (single-digit-ms in practice)
+      awaitCount(stages.get().toLong)
       spark.sparkContext.removeSparkListener(listener)
       (got, stages.get())
     }
@@ -168,8 +168,11 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     // distinct labels, not job counts: one probe's first() may launch several
     // incremental executeTake jobs, all carrying the same it=N description
     val probes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // every job start, labelled or not: the drain settles on this tally
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
         val desc = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
         if (desc.contains("dangling mass probe")) { probes.add(desc); () }
@@ -178,7 +181,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     val e = Seq(("a", "b")).toDF("src", "dst").localCheckpoint(true)
     spark.sparkContext.addSparkListener(listener)
     val ranks = GraphOps.pageRank(e, "src", "dst", iters = 1, redistributeDangling = true)
-    Thread.sleep(500) // listener bus drain
+    awaitCount(jobs.get().toLong)
     spark.sparkContext.removeSparkListener(listener)
     assert(probes.isEmpty,
       s"dangling-mass probes $probes fired for a 1-iteration run (expected none: " +
@@ -188,7 +191,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     probes.clear()
     spark.sparkContext.addSparkListener(listener)
     GraphOps.pageRank(e, "src", "dst", iters = 2, redistributeDangling = true).count()
-    Thread.sleep(500)
+    awaitCount(jobs.get().toLong)
     spark.sparkContext.removeSparkListener(listener)
     assert(probes.size() == 1,
       s"dangling-mass probes $probes for a 2-iteration run (expected exactly it=1's)")

@@ -285,6 +285,19 @@ class CurationPipelineSpec extends AnyFunSuite with SparkTestBase {
       "resumed output must be byte-identical to the uninterrupted run")
   }
 
+  test("runJob whose gates drop every doc commits an empty curated table") {
+    val docs = (1L to 30L).map(i => (i, s"http://h$i.example/", "too short")).toDF("id", "url", "text")
+    val out = java.nio.file.Files.createTempDirectory("curate-empty").toString
+    val r = CurationPipeline.runJob(spark, docs, out, "text", "id", "url", nBuckets = 4)
+    assert(r.funnel.last == 0L, r.funnel.mkString(","))
+    val lin = spark.read.parquet(r.lineagePath).select("bucket", "row_count", "digest")
+      .collect().map(x => (x.getInt(0), x.getLong(1), x.getString(2))).toSet
+    assert(lin == (0 until 4).map(b => (b, 0L, BucketCommit.EmptyDigest)).toSet, lin)
+    val parts = Option(new java.io.File(r.curatedPath).listFiles()).getOrElse(Array.empty)
+      .flatMap(d => Option(d.listFiles()).getOrElse(Array(d))).filter(_.getName.endsWith(".parquet"))
+    assert(parts.isEmpty, parts.map(_.getName).mkString(","))
+  }
+
   test("host cap routes heavy hosts through the salted two-level rank (pipeline)") {
     // one heavy host (30 quality survivors, cap 5) + light hosts: counts and
     // curated ids must equal the naive first-k-per-host semantics

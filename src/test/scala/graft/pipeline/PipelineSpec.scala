@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -15,6 +18,27 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   private def tmp(): String = Files.createTempDirectory("graft-pipe").toString
 
   private lazy val truth = Corpus.truth(N)
+
+  /** Runs one ExtractPipeline.run and returns the table dir name of every
+    * parquet write it executed, in order. The run's last write is its
+    * metrics table; the listener bus delivers in order, so once that write
+    * is seen every earlier one has been. */
+  private def tableWrites(run: => ExtractPipeline.RunResult): (ExtractPipeline.RunResult, Seq[String]) = {
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
+          .foreach(writes.add)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val res = run
+      import scala.jdk.CollectionConverters._
+      awaitCount(writes.asScala.count(_ == "metrics").toLong, expected = Some(1L))
+      (res, writes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("force mode: extracted text byte-identical to by-construction truth for every url") {
     val out = tmp()
@@ -145,7 +169,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(after.toSeq == full.toSeq)
   }
 
-  test("payload tables write zstd parquet by default; codec configurable") {
+  test("payload tables write zstd parquet") {
     val out = tmp()
     ExtractPipeline.run(spark, Corpus.pages(spark, 100), out,
       ExtractPipeline.Config(mode = "force", runId = "codec-0", nBuckets = 4))
@@ -158,15 +182,6 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(dataFiles("extracted").nonEmpty)
     assert(dataFiles("extracted").forall(_.getName.contains(".zstd.")),
       dataFiles("extracted").map(_.getName).take(3))
-    // snappy opt-out still works (read-back identical)
-    val out2 = tmp()
-    ExtractPipeline.run(spark, Corpus.pages(spark, 100), out2,
-      ExtractPipeline.Config(mode = "force", runId = "codec-1", nBuckets = 4, parquetCodec = "snappy"))
-    val a = spark.read.parquet(s"$out/extracted").select("url", "text_sha256")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    val b = spark.read.parquet(s"$out2/extracted").select("url", "text_sha256")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(a.toSeq == b.toSeq)
   }
 
   test("malformed urls never kill the run (try_parse_url: null host shares a salt key)") {
@@ -243,9 +258,12 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .select("bucket").distinct().count()
     assert(committedAfterCrash == 8, s"expected 8 committed buckets, got $committedAfterCrash")
 
-    // resume: finishes the remaining groups only
-    val res = ExtractPipeline.run(spark, Corpus.pages(spark, N), out, cfg.copy(runId = "g2"))
+    // resume: finishes the remaining groups only — the groups are fixed
+    // bucket ranges, so the rerun writes exactly the 2 uncommitted groups
+    val (res, writes) = tableWrites(
+      ExtractPipeline.run(spark, Corpus.pages(spark, N), out, cfg.copy(runId = "g2")))
     assert(res.resumedBuckets == 8)
+    assert(writes.count(_ == "extracted") == 2, writes.mkString(","))
     val rows = spark.read.parquet(res.extractedPath)
       .select("url", "text_sha256").collect().map(r => (r.getString(0), r.getString(1))).sorted
     assert(rows.toSeq == refRows.toSeq)
@@ -253,6 +271,41 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val runs = spark.read.parquet(res.lineagePath).select("run_id").distinct()
       .collect().map(_.getString(0)).toSet
     assert(runs == Set("g1", "g2"))
+  }
+
+  test("all-quarantined input commits every bucket empty instead of crashing") {
+    val s = spark
+    import s.implicits._
+    val pages = (0 until 50).map(i =>
+      graft.model.PageRow(s"http://junk$i.example/", new java.sql.Timestamp(0),
+        "JUNKJUNK".getBytes, null, null)).toDF()
+    val out = tmp()
+    val res = ExtractPipeline.run(spark, pages, out,
+      ExtractPipeline.Config(mode = "force", runId = "allq-0", nBuckets = 8))
+    assert(res.extracted == 0 && res.quarantined == 50, res)
+    val lin = spark.read.parquet(res.lineagePath).select("bucket", "row_count", "digest")
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSet
+    assert(lin == (0 until 8).map(b => (b, 0L, BucketCommit.EmptyDigest)).toSet, lin)
+  }
+
+  test("small input: empty buckets commit, so a rerun resumes all 64 and writes nothing") {
+    val out = tmp()
+    val cfg = ExtractPipeline.Config(mode = "force", runId = "small-0")
+    val res = ExtractPipeline.run(spark, Corpus.pages(spark, 20), out, cfg)
+    val lin = spark.read.parquet(res.lineagePath).collect()
+    assert(lin.length == 64)
+    val empty = lin.filter(_.getAs[Long]("row_count") == 0L)
+    assert(empty.nonEmpty && empty.forall(_.getAs[String]("digest") == BucketCommit.EmptyDigest))
+    // the snapshot lists the empty buckets too
+    val json = CatalogIO.readSnapshotJson(spark, res.extractedPath, res.snapshotId)
+    assert("\"bucket\":".r.findAllIn(json).size == 64)
+
+    val (again, writes) = tableWrites(
+      ExtractPipeline.run(spark, Corpus.pages(spark, 20), out, cfg.copy(runId = "small-1")))
+    assert(again.resumedBuckets == 64)
+    assert(!writes.contains("extracted") && !writes.contains("lineage"), writes.mkString(","))
+    assert((again.extracted, again.skipped, again.errors, again.quarantined) ==
+      (res.extracted, res.skipped, res.errors, res.quarantined), again)
   }
 
   test("legacy lineage (no committed_utc_ms/err_count) still resumes, compacts and summarizes") {
