@@ -22,62 +22,45 @@ object DedupOps {
     df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
+  /** MinHash signature length and shingle width of every minhash path: an
+    * index and the batch classified against it must agree, and the oracles replay these. */
+  private val NumHashes = 64
+  private val ShingleSize = 3
+
   /** MinHash-LSH near-dup candidate pairs (a < b) with estimated Jaccard ≥ threshold.
-    * Band-key explode + self-join on the band bucket; signatures compared only for
-    * same-bucket candidates.
-    *
-    * Bucket cap: a degenerate band key (boilerplate-heavy shingle sets, empty
-    * docs) shared by m rows yields m(m-1)/2 candidates — quadratic inside one
-    * bucket at corpus scale. Rows in bands larger than maxBucketSize are
-    * excluded from the join via a window count over the SAME shuffle key (no
-    * extra scan); the dropped keys are diagnosable with oversizedBands. */
+    * Band-key explode + self-join on the band bucket (LshCandidates, capped at
+    * maxBucketSize — dropped keys: oversizedBands); signatures compared only
+    * for same-bucket candidates. */
   def nearDupPairs(df: DataFrame, textCol: String, idCol: String,
-                   threshold: Double = 0.5,
-                   numHashes: Int = 64, shingleSize: Int = 3, rowsPerBand: Int = 8,
+                   threshold: Double = 0.5, rowsPerBand: Int = 8,
                    maxBucketSize: Int = 1 << 13): DataFrame = {
     // ONE text-hashing pass: sig + bands fused (MinHashSigBands), then the
     // narrow (id, sig, bands) frame — ~50× smaller than the text corpus — is
     // eagerly materialized (localCheckpoint: lineage truncated, blocks freed
     // when the result is dropped) so the band join and both signature
     // attachments read the materialized frame instead of re-hashing the
-    // corpus once per consumer.
-    val base = df.select(col(idCol).as("_id"),
-        minhash_sig_bands(col(textCol), numHashes, shingleSize, rowsPerBand).as("_m"))
-      .select(col("_id"), col("_m.sig").as("_sig"), col("_m.bands").as("_bands"))
+    // corpus once per consumer (the unused digest is pruned).
+    val base = buildDedupIndex(df, textCol, idCol, rowsPerBand).drop("_digest")
       .localCheckpoint(true)
     // the band self-join shuffles only (id, band) — signatures (8× wider) are
-    // attached AFTER candidate pairs are deduped, keeping the explosive stage narrow
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_band"))
-    val bands = base.select(col("_id"), explode(col("_bands")).as("_band"))
-      .withColumn("_bsize", count(lit(1)).over(w))
-      .filter(col("_bsize") <= maxBucketSize)
-      .drop("_bsize")
-    val candidates = bands.as("x").join(bands.as("y"),
-        col("x._band") === col("y._band") && col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"))
-      .distinct()
-    val sigs = base.select(col("_id").as("_sid"), col("_sig"))
-    // native match count — the interpreted aggregate(zip_with) form costs
-    // ~64 Expression.eval calls per candidate pair
-    val est = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expr.SigMatchCount(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("_siga")),
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("_sigb"))))
-      .cast("double") / numHashes
-    // sig attach stays TWO joins against the checkpointed narrow frame — the
-    // verifiedNearDupPairs melt shape was tried here and measured SLOWER
-    // (q39 +0.4 s at sf0.1): the sigs are materialized localCheckpoint
+    // attached AFTER candidate pairs are deduped, keeping the explosive stage
+    // narrow. The sig attach stays TWO joins against the checkpointed narrow
+    // frame — the verifiedNearDupPairs melt shape was tried here and measured
+    // SLOWER (q39 +0.4 s at sf0.1): the sigs are materialized localCheckpoint
     // blocks (re-reading them is a local block read, not a corpus re-scan),
     // while pre-est-filter candidates are NOT a sliver on dup-heavy corpora,
     // so the melt's groupBy shuffled ~2×|candidates| of 64-long signatures
     // across the network to save two cheap block re-reads
-    candidates
-      .join(sigs.select(col("_sid"), col("_sig").as("_siga")), col("a") === col("_sid")).drop("_sid")
-      .join(sigs.select(col("_sid"), col("_sig").as("_sigb")), col("b") === col("_sid")).drop("_sid")
-      .withColumn("est_jaccard", est)
+    val sigs = base.select(col("_id"), col("_sig").as("_v"))
+    LshCandidates.attach(LshCandidates.selfJoin(bandKeys(base), maxBucketSize),
+        "a", "b", sigs, sigs)
+      .withColumn("est_jaccard", LshCandidates.sigEstimate(NumHashes))
       .filter(col("est_jaccard") >= threshold)
       .select(col("a"), col("b"), round(col("est_jaccard"), 4).as("est_jaccard"))
   }
+
+  private def bandKeys(sigs: DataFrame): DataFrame =
+    sigs.select(col("_id"), explode(col("_bands")).as("_key"))
 
   /** Two-phase near-dup detection: MinHash-LSH candidates verified by EXACT
     * token-shingle Jaccard (computed only on candidate pairs — the standard
@@ -89,15 +72,17 @@ object DedupOps {
     * two-join form read the corpus text column twice (once per side) and at
     * small scale broadcast the TEXT side twice; this shape scans it once and
     * shuffles only candidate-member texts — pairs are a sliver of the corpus,
-    * so the heavy bytes move once (ids are unique per the dedup-family
-    * contract: signatures, components and keepers are all per-id). */
+    * so the heavy bytes move once. Ids must be unique (the dedup-family
+    * contract): a duplicated id is COLLAPSED here — max(when) keeps the
+    * lexicographically greatest text per side, hiding it — while the signature
+    * attach (LshCandidates.attach) multiplies its pair rows. */
   def verifiedNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                            threshold: Double = 0.8,
-                           candidateThreshold: Double = 0.5, shingleSize: Int = 3,
+                           candidateThreshold: Double = 0.5,
                            rowsPerBand: Int = 8): DataFrame = {
     val texts = df.select(col(idCol).as("_tid"), col(textCol).as("_t"))
     val cand = nearDupPairs(df, textCol, idCol, candidateThreshold,
-      shingleSize = shingleSize, rowsPerBand = rowsPerBand)
+      rowsPerBand = rowsPerBand)
     val melted = cand.select(col("a"), col("b"),
       explode(array(
         struct(lit("a").as("_side"), col("a").as("_tid")),
@@ -107,7 +92,7 @@ object DedupOps {
       .groupBy(col("a"), col("b"))
       .agg(max(when(col("_side") === "a", col("_t"))).as("_ta"),
         max(when(col("_side") === "b", col("_t"))).as("_tb"))
-      .withColumn("jaccard", round(shingle_jaccard(col("_ta"), col("_tb"), shingleSize), 4))
+      .withColumn("jaccard", round(shingle_jaccard(col("_ta"), col("_tb"), ShingleSize), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
   }
@@ -131,8 +116,8 @@ object DedupOps {
     * round-1 single-prefix table, which missed any pair whose differing bits
     * landed in the prefix. Candidates are verified by exact popcount.
     *
-    * Scale shape: ALL maxHamming+1 tables ride ONE composite "<t>:<block>" key
-    * (the same fuse applied to embedding LSH in ccbf91c): a single
+    * Scale shape: ALL maxHamming+1 tables ride ONE packed (t << 32) | block
+    * long key (the same fuse as embedding LSH's table/bucket key): a single
     * (d+1)×n-row shuffle + one self-join, instead of d+1 separate
     * full-corpus shuffles unioned. With maxHamming=3 each table keys on
     * 16 bits (65k buckets per table, growing with the corpus hash entropy).
@@ -153,34 +138,28 @@ object DedupOps {
     * (e.g. undecodable images) are dropped, not bucketed. */
   def fingerprintNearDupPairs(df: DataFrame, fpCol: String, idCol: String,
                               maxHamming: Int = 3,
-                              maxBucketSize: Int = 1 << 13): DataFrame = {
+                              maxBucketSize: Int = 1 << 13): DataFrame =
+    // self-join on the packed key: the corpus is hashed + shuffled ONCE; the
+    // 8-byte fingerprint rides along for the popcount verify
+    LshCandidates.selfJoin(fingerprintKeys(df, fpCol, idCol, maxHamming),
+        maxBucketSize, payload = Some("_sim"))
+      .withColumn("hamming", bit_count(col("_pa").bitwiseXOR(col("_pb"))))
+      .filter(col("hamming") <= maxHamming)
+      .select(col("a"), col("b"), col("hamming"))
+
+  /** The fingerprint keyed frame (_id, _sim, _key), key = (t << 32) | block t. */
+  private[ops] def fingerprintKeys(df: DataFrame, fpCol: String, idCol: String,
+                                   maxHamming: Int): DataFrame = {
     val nBlocks = maxHamming + 1
     require(nBlocks >= 2 && nBlocks <= 16, "maxHamming must be in [1, 15]")
     val blockBits = 64 / nBlocks
-    val withSim = df.select(col(idCol).as("_id"), col(fpCol).cast("long").as("_sim"))
-      .filter(col("_sim").isNotNull)
-    // block t's bits as the bucket key, tagged with t so tables don't mix
     val keys = array((0 until nBlocks).map { t =>
-      concat(lit(t + ":"),
-        shiftrightunsigned(shiftleft(col("_sim"), t * blockBits), 64 - blockBits).cast("string"))
+      lit(t.toLong << 32).bitwiseOR(
+        shiftrightunsigned(shiftleft(col("_sim"), t * blockBits), 64 - blockBits))
     }: _*)
-    val exploded = withSim.select(col("_id"), col("_sim"), explode(keys).as("_block"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_block"))
-    val capped = exploded
-      .withColumn("_bsize", count(lit(1)).over(w))
-      .filter(col("_bsize") <= maxBucketSize)
-      .drop("_bsize")
-    // self-join on the composite key: both sides are the identical subtree, so
-    // the shuffle is a ReusedExchange (corpus hashed + shuffled ONCE); the
-    // 8-byte fingerprint rides along for the popcount verify
-    capped.as("x").join(capped.as("y"),
-        col("x._block") === col("y._block") && col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"),
-        col("x._sim").as("_sa"), col("y._sim").as("_sb"))
-      .distinct() // a pair may collide in several tables
-      .withColumn("hamming", bit_count(col("_sa").bitwiseXOR(col("_sb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a"), col("b"), col("hamming"))
+    df.select(col(idCol).as("_id"), col(fpCol).cast("long").as("_sim"))
+      .filter(col("_sim").isNotNull)
+      .select(col("_id"), col("_sim"), explode(keys).as("_key"))
   }
 
   /**
@@ -325,7 +304,13 @@ object DedupOps {
     val pairs = verifiedNearDupPairs(df, textCol, idCol,
       threshold = threshold, candidateThreshold = candidateThreshold,
       rowsPerBand = rowsPerBand)
-    val comp = connectedComponents(pairs)
+    dropComponentLosers(df, idCol, connectedComponents(pairs), qualityCol)
+  }
+
+  /** The keeper step of every cluster dedup: one left_anti join drops each
+    * component member but its keeper (min id, or best `qualityCol`). */
+  private[ops] def dropComponentLosers(df: DataFrame, idCol: String, comp: DataFrame,
+                                       qualityCol: Option[String] = None): DataFrame = {
     val losers = qualityCol match {
       case None =>
         comp.filter(col("id") =!= col("component")).select(col("id").as(idCol))
@@ -352,13 +337,12 @@ object DedupOps {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Band buckets larger than maxBucketSize — the skew diagnostic for the cap
-    * applied in nearDupPairs (run it when dropped recall must be accounted). */
-  def oversizedBands(df: DataFrame, textCol: String,
-                     numHashes: Int = 64, shingleSize: Int = 3, rowsPerBand: Int = 8,
+  /** Band keys larger than maxBucketSize as (_key, count): exactly the bands
+    * the nearDupPairs cap drops (run it when dropped recall must be accounted). */
+  def oversizedBands(df: DataFrame, textCol: String, rowsPerBand: Int = 8,
                      maxBucketSize: Int = 1 << 13): DataFrame =
-    df.select(explode(minhash_bands(col(textCol), numHashes, shingleSize, rowsPerBand)).as("_band"))
-      .groupBy("_band").count().filter(col("count") > maxBucketSize)
+    LshCandidates.oversized(bandKeys(buildDedupIndex(
+      df.select(lit(0L).as("_id"), col(textCol)), textCol, "_id", rowsPerBand)), maxBucketSize)
 
   // ------------------------------------------------------- incremental dedup
 
@@ -373,11 +357,10 @@ object DedupOps {
     *
     * Schema: (_id, _digest STRING, _sig ARRAY<LONG>, _bands ARRAY<LONG>). */
   def buildDedupIndex(df: DataFrame, textCol: String, idCol: String,
-                      numHashes: Int = 64, shingleSize: Int = 3,
                       rowsPerBand: Int = 8): DataFrame =
     df.select(col(idCol).as("_id"),
         sha2(encode(col(textCol), "UTF-8"), 256).as("_digest"),
-        minhash_sig_bands(col(textCol), numHashes, shingleSize, rowsPerBand).as("_m"))
+        minhash_sig_bands(col(textCol), NumHashes, ShingleSize, rowsPerBand).as("_m"))
       .select(col("_id"), col("_digest"),
         col("_m.sig").as("_sig"), col("_m.bands").as("_bands"))
 
@@ -393,11 +376,10 @@ object DedupOps {
     * `exact`, the best near match (max estimate, ties to min id) for `near`,
     * NULL for `fresh`; est_jaccard is non-NULL only for `near`.
     *
-    * Scale shape: the exact arm joins 32-byte digests against a min-id-per-
-    * digest pre-aggregate of the index (one row per distinct digest, however
-    * many historic duplicates exist); the near arm shuffles only (id, band)
-    * longs — band keys explode on BOTH sides and each side gets the same
-    * oversized-bucket cap as nearDupPairs (boilerplate bands accumulate over
+    * Scale shape: the exact arm joins 32-byte digests against the index,
+    * then takes the min id per batch row; the near arm shuffles only
+    * (id, band) longs — band keys explode on BOTH sides and each side gets the
+    * same oversized-bucket cap as nearDupPairs (boilerplate bands accumulate over
     * the whole history on the index side, and a boilerplate-heavy NEW batch —
     * the common crawl case — can put B rows in one band on the batch side,
     * paying up to B×maxBucketSize candidate amplification before the
@@ -408,14 +390,11 @@ object DedupOps {
   def dedupAgainstIndex(newDf: DataFrame, index: DataFrame,
                         textCol: String, idCol: String,
                         threshold: Double = 0.5,
-                        numHashes: Int = 64, shingleSize: Int = 3,
                         rowsPerBand: Int = 8,
                         maxBucketSize: Int = 1 << 13): DataFrame = {
     // one text pass over the batch; materialized (lineage truncated) so the
     // exact arm, band explode, and signature attach read it, not the corpus
-    val fresh = buildDedupIndex(newDf, textCol, idCol,
-        numHashes, shingleSize, rowsPerBand)
-      .localCheckpoint(true)
+    val fresh = buildDedupIndex(newDf, textCol, idCol, rowsPerBand).localCheckpoint(true)
     // exact arm: batch digests join the index FIRST, then min-per-batch-row —
     // identical to pre-aggregating min-id-per-digest over the whole index
     // (ids are unique per the dedup-family contract), but the full-index
@@ -425,30 +404,19 @@ object DedupOps {
     val exactHit = fresh.select(col("_id"), col("_digest"))
       .join(index.select(col("_digest"), col("_id").as("_xid")), Seq("_digest"))
       .groupBy(col("_id")).agg(min(col("_xid")).as("_xid"))
-    val wIdx = org.apache.spark.sql.expressions.Window.partitionBy(col("_band"))
-    val idxBands = index.select(col("_id").as("_iid"), explode(col("_bands")).as("_band"))
-      .withColumn("_bsize", count(lit(1)).over(wIdx))
-      .filter(col("_bsize") <= maxBucketSize)
-      .drop("_bsize")
     // the batch side gets the SAME cap (r07 verdict item: the index-side-only
     // cap left B×8192 amplification on the table for a degenerate batch band)
-    val newBands = fresh.select(col("_id"), explode(col("_bands")).as("_band"))
-      .withColumn("_bsize", count(lit(1)).over(wIdx))
-      .filter(col("_bsize") <= maxBucketSize)
-      .drop("_bsize")
-    val candidates = newBands.join(idxBands, Seq("_band"))
+    val idxBands = LshCandidates.capped(bandKeys(index), maxBucketSize)
+      .select(col("_id").as("_iid"), col("_key"))
+    val newBands = LshCandidates.capped(bandKeys(fresh), maxBucketSize)
+    val candidates = newBands.join(idxBands, Seq("_key"))
       .select(col("_id"), col("_iid")).distinct()
-    val est = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.expr.SigMatchCount(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("_siga")),
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("_sigb"))))
-      .cast("double") / numHashes
     val wBest = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_id")).orderBy(col("_est").desc, col("_iid").asc)
-    val bestNear = candidates
-      .join(fresh.select(col("_id"), col("_sig").as("_siga")), Seq("_id"))
-      .join(index.select(col("_id").as("_iid"), col("_sig").as("_sigb")), Seq("_iid"))
-      .withColumn("_est", est)
+    val bestNear = LshCandidates.attach(candidates, "_id", "_iid",
+        fresh.select(col("_id"), col("_sig").as("_v")),
+        index.select(col("_id"), col("_sig").as("_v")))
+      .withColumn("_est", LshCandidates.sigEstimate(NumHashes))
       .filter(col("_est") >= threshold)
       .withColumn("_rn", row_number().over(wBest))
       .filter(col("_rn") === 1)
@@ -515,8 +483,62 @@ object DedupOps {
     * staleness caveat as AnnModelIO.modelDir: key the dir by corpus snapshot
     * path; a corpus mutated in place keeps serving the old index. */
   def indexFor(df: DataFrame, textCol: String, idCol: String, dir: String,
-               numHashes: Int = 64, shingleSize: Int = 3, rowsPerBand: Int = 8,
-               runId: String = "index"): DataFrame =
+               rowsPerBand: Int = 8, runId: String = "index"): DataFrame =
     graft.pipeline.CatalogIO.derivedFor(df.sparkSession, dir, runId)(
-      buildDedupIndex(df, textCol, idCol, numHashes, shingleSize, rowsPerBand))
+      buildDedupIndex(df, textCol, idCol, rowsPerBand))
+}
+
+/**
+ * The near-dup candidate core of every LSH path (nearDupPairs,
+ * fingerprintNearDupPairs, dedupAgainstIndex, SimilarityOps.embeddingNearDupPairs);
+ * callers make their keys, place their checkpoint and verify. Keyed rows are
+ * (_id, _key: LONG) with the table in the key's high bits: MinHash bands as
+ * is, (t << 32) | block for fingerprints, (t << 24) | bucket for embeddings.
+ */
+private[ops] object LshCandidates {
+  import org.apache.spark.sql.graft.ColumnBridge
+
+  /** The bucket cap: a key shared by m rows yields m(m-1)/2 candidates, so a
+    * window count over the join's own shuffle key drops rows of keys over
+    * maxBucketSize (listed by `oversized`). dropSingletons also drops
+    * one-member keys: exact for a self-join, but a probe or two-sided join
+    * still matches a singleton. */
+  def capped(keyed: DataFrame, maxBucketSize: Int, dropSingletons: Boolean = false): DataFrame = {
+    val size = col("_bsize")
+    keyed.withColumn("_bsize", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("_key"))))
+      .filter(if (dropSingletons) size.between(2, maxBucketSize) else size <= maxBucketSize)
+      .drop("_bsize")
+  }
+
+  /** The skew diagnostic: (_key, count) of every key the cap drops. */
+  def oversized(keyed: DataFrame, maxBucketSize: Int): DataFrame =
+    keyed.groupBy(col("_key")).count().filter(col("count") > maxBucketSize)
+
+  /** Distinct pairs (a < b) sharing a capped key (at scale one key exchange
+    * plus its reuse); a narrow `payload` column rides along as (_pa, _pb). */
+  def selfJoin(keyed: DataFrame, maxBucketSize: Int, payload: Option[String] = None): DataFrame = {
+    val k = capped(keyed, maxBucketSize, dropSingletons = true)
+    val carried = payload.toSeq.flatMap(p => Seq(col(s"x.$p").as("_pa"), col(s"y.$p").as("_pb")))
+    k.as("x").join(k.as("y"), col("x._key") === col("y._key") && col("x._id") < col("y._id"))
+      .select(Seq(col("x._id").as("a"), col("y._id").as("b")) ++ carried: _*)
+      .distinct() // a pair may share several keys
+  }
+
+  /** `_v` of the (_id, _v) frames onto both pair sides: _va at `a`, _vb at
+    * `b`. Ids must be unique: a duplicated id multiplies the pair's rows. */
+  def attach(pairs: DataFrame, a: String, b: String,
+             aValues: DataFrame, bValues: DataFrame): DataFrame =
+    pairs
+      .join(aValues.select(col("_id").as("_ida"), col("_v").as("_va")), col(a) === col("_ida"))
+      .drop("_ida")
+      .join(bValues.select(col("_id").as("_idb"), col("_v").as("_vb")), col(b) === col("_idb"))
+      .drop("_idb")
+
+  /** Estimated Jaccard of attached signatures (_va, _vb) by native match
+    * count (aggregate(zip_with) costs ~64 Expression.eval calls per pair). */
+  def sigEstimate(numHashes: Int): Column =
+    ColumnBridge.column(graft.expr.SigMatchCount(
+      ColumnBridge.expression(col("_va")), ColumnBridge.expression(col("_vb"))))
+      .cast("double") / numHashes
 }

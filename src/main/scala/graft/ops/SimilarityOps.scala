@@ -21,9 +21,7 @@ import graft.functions._
  * planes is bought back with L independent tables (classic (k, L) LSH,
  * Indyk–Motwani / Gionis et al. VLDB'99) plus Hamming-1 multi-probe on the
  * probing side. Degenerate buckets (all-zero vectors, mass duplicates) are
- * capped: rows in buckets larger than maxBucketSize are dropped from the
- * candidate join (quadratic blowup is never allowed), diagnosable via
- * oversizedBuckets.
+ * capped by the shared LshCandidates core, diagnosable via oversizedBuckets.
  */
 object SimilarityOps {
 
@@ -89,17 +87,25 @@ object SimilarityOps {
     math.min(1L << 14,
       math.max(math.max(1, parallelism).toLong, rows * nTables / 500000L)).toInt
 
-  /** Buckets larger than maxBucketSize across the (table, bucket) keys —
-    * the skew diagnostic for the cap applied in embeddingNearDupPairs. */
-  def oversizedBuckets(df: DataFrame, vecCol: String, nPlanes: Int, nTables: Int,
-                       maxBucketSize: Int): DataFrame = {
-    val dim = embeddingDim(df, vecCol)
-    val emb = df.select(transform(col(vecCol), x => x.cast("double")).as("_v"))
-    val tables = (0 until nTables).map { t =>
-      emb.select(lit(t).as("_table"), lshBucket(col("_v"), lshPlanes(nPlanes, dim, seed = t.toLong * 0x9e37L)).as("_bucket"))
-    }.reduce(_ unionByName _)
-    tables.groupBy("_table", "_bucket").count().filter(col("count") > maxBucketSize)
+  /** Keys larger than maxBucketSize as (_key, count): with the same defaults
+    * (k from planesFor) exactly the keys the embeddingNearDupPairs cap drops. */
+  def oversizedBuckets(df: DataFrame, vecCol: String, nPlanes: Int = 0, nTables: Int = 4,
+                       maxBucketSize: Int = 1 << 13): DataFrame = {
+    val k = if (nPlanes > 0) nPlanes else planesFor(df.count())
+    LshCandidates.oversized(bucketKeys(vectors(df, vecCol, lit(0L)), k, nTables,
+      embeddingDim(df, vecCol)), maxBucketSize)
   }
+
+  private def vectors(df: DataFrame, vecCol: String, id: Column): DataFrame =
+    df.select(id.as("_id"), transform(col(vecCol), x => x.cast("double")).as("_v"))
+
+  /** The embedding keyed frame (_id, _key), key = (t << 24) | bucket of table
+    * t: each table's k×dim bucket dots run once per row, inside one array. */
+  private def bucketKeys(emb: DataFrame, k: Int, nTables: Int, dim: Int): DataFrame =
+    emb.select(col("_id"), explode(array((0 until nTables).map { t =>
+      lit(t.toLong << 24).bitwiseOR(
+        lshBucket(col("_v"), lshPlanes(k, dim, seed = t.toLong * 0x9e37L)).cast("long"))
+    }: _*)).as("_key"))
 
   /** Embedding near-dup removal with CLUSTER semantics: LSH candidate pairs →
     * connected components → keep exactly the min-id row per cluster (the
@@ -110,10 +116,7 @@ object SimilarityOps {
                           approxRows: Long = -1L): DataFrame = {
     val pairs = embeddingNearDupPairs(df, vecCol, idCol, threshold,
       nTables = nTables, approxRows = approxRows)
-    val losers = DedupOps.connectedComponents(pairs)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+    DedupOps.dropComponentLosers(df, idCol, DedupOps.connectedComponents(pairs))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540 §2): semantic dedup via
@@ -179,17 +182,15 @@ object SimilarityOps {
 
   /** Embedding near-dup pairs (a < b) with cosine ≥ threshold via (k, L)
     * hyperplane LSH: k sign-bit planes per table (k grown with corpus size),
-    * L independent tables unioned, Hamming-1 multi-probe on the probing side,
-    * exact cosine verification on candidates only — never a full cross join.
+    * L independent tables, Hamming-1 multi-probe on the probing side, exact
+    * cosine verification on candidates only — never a full cross join.
     *
-    * Shuffle shape: per table, one narrow (id, bucket) self-join; vectors ride
-    * along (needed for the verify). Buckets over maxBucketSize are excluded
-    * from the join (window count over the same shuffle key — no extra scan);
-    * at 10^10 rows one degenerate bucket would otherwise go quadratic. */
+    * Shuffle shape: ALL tables ride one packed long key — a single L×n-row
+    * shuffle instead of L; keys over maxBucketSize are capped (LshCandidates);
+    * vectors attach to candidate pairs only, never ride the key shuffle. */
   def embeddingNearDupPairs(df: DataFrame, vecCol: String, idCol: String,
                             threshold: Double = 0.95,
                             nPlanes: Int = 0, nTables: Int = 4,
-                            targetBucketSize: Int = 64,
                             maxBucketSize: Int = 1 << 13,
                             approxRows: Long = -1L): DataFrame = {
     val dim = embeddingDim(df, vecCol)
@@ -199,27 +200,8 @@ object SimilarityOps {
     // know the corpus size (a prior stage's count, table stats) pass
     // approxRows and skip the sizing scan entirely
     val k = if (nPlanes > 0) nPlanes
-            else planesFor(if (approxRows > 0) approxRows else df.count(), targetBucketSize)
-    val emb = df.select(col(idCol).as("_id"),
-      transform(col(vecCol), x => x.cast("double")).as("_v"))
-    // ALL tables ride one composite (table, bucket) key: a single L×n-row
-    // shuffle + self-join instead of L separate full shuffles (at 10^10 rows
-    // the union-of-joins shape pays the corpus shuffle L times over).
-    // The per-table buckets are materialized as ONE array column first: any
-    // expression referencing a bucket k+1 times (the Hamming-1 probe fan-out)
-    // would otherwise re-run the k×dim dot products per reference.
-    val buckets = array((0 until nTables).map { t =>
-      lshBucket(col("_v"), lshPlanes(k, dim, seed = t.toLong * 0x9e37L))
-    }: _*)
-    val withB = emb.select(col("_id"), buckets.as("_buckets"))
-    // one NARROW (id, table:int, bucket:int) row per (vector, table); the
-    // bucket-size cap (window over the (table, bucket) key — same shuffle)
-    // removes oversized-bucket rows from BOTH sides: a row in a degenerate
-    // bucket must neither build nor probe in that table, or the quadratic
-    // blowup the cap exists to prevent reopens through the probes
-    val perTable = withB.select(col("_id"),
-        posexplode(col("_buckets")).as(Seq("_t", "_bucket")))
-    val w = Window.partitionBy(col("_t"), col("_bucket"))
+            else planesFor(if (approxRows > 0) approxRows else df.count())
+    val emb = vectors(df, vecCol, col(idCol))
     // checkpoint partition count ∝ data (≈500k narrow rows per partition),
     // FLOORED at the session's parallelism: coalesce happens BEFORE the
     // checkpoint materializes, so a floor below the core count would run the
@@ -234,44 +216,37 @@ object SimilarityOps {
     val ckptParts = checkpointPartitions(
       if (approxRows > 0) approxRows else 1000000L, nTables,
       df.sparkSession.sparkContext.defaultParallelism)
-    val capped = perTable
-      .withColumn("_bsize", count(lit(1)).over(w))
-      .filter(col("_bsize") <= maxBucketSize)
-      .drop("_bsize")
+    // the cap removes oversized-key rows from BOTH sides: a row in a
+    // degenerate bucket must neither build nor probe in that table, or the
+    // quadratic blowup the cap exists to prevent reopens through the probes
+    val keyed = LshCandidates.capped(bucketKeys(emb, k, nTables, dim), maxBucketSize)
       .coalesce(ckptParts)
       // the build and probe branches below are DIFFERENT projections of this
       // subtree (no exchange reuse possible): materialize it once
       // (localCheckpoint — eager, lineage-truncated, blocks freed on GC) so
       // the k×dim bucket dots and the cap window run a single time.
-      // Materialized WIDTH matters at 10^10 rows: only (id, t:int, bucket:int)
-      // is checkpointed — the k+1 probe-key STRINGS per row (~25× wider) are
-      // derived from the 4-byte bucket AFTER the checkpoint, not stored in it
+      // Materialized WIDTH matters at 10^10 rows: only (id, key) is
+      // checkpointed — the k+1 probe keys per row are derived from it
+      // AFTER the checkpoint, not stored in it
       .localCheckpoint(true)
-    // the explosive stage is NARROW (id, key) only, and the join key is a
-    // PACKED LONG (table in the high bits, bucket in the low 24) — a long
-    // hashes/compares in one codegen'd op where the former "t:bucket" string
-    // key paid two casts + a concat + bytewise hashing per probe row
-    def packKey(t: Column, bucket: Column): Column =
-      shiftleft(t.cast("long"), 24).bitwiseOR(bucket.cast("long"))
     // ASCENDING-ONLY multi-probe: flip only ZERO bits to one. A Hamming-1
     // pair lands in buckets differing in exactly one bit, and the row in the
     // LOWER bucket probes up into the other — flipping set bits too would
     // only rediscover every cross-bucket pair from the second direction
     // (2× join input for an identical candidate-pair set; set-equality is
     // asserted by AnnSpec). Same-bucket pairs come from the radius-0 own-key
-    // probe. Nulls mark skipped set bits and are filtered after the explode
-    // (a plain codegen'd filter — an array-level lambda would be interpreted).
-    val keyed = capped.select(col("_id"), packKey(col("_t"), col("_bucket")).as("_tb"))
-    val ascProbes = array(col("_bucket") +: (0 until k).map(i =>
-      when(col("_bucket").bitwiseAND(lit(1 << i)) === 0,
-        col("_bucket").bitwiseOR(lit(1 << i)))): _*)
-    val probed = capped.select(col("_id"), col("_t"), explode(ascProbes).as("_pb"))
-      .filter(col("_pb").isNotNull)
-      .select(col("_id"), packKey(col("_t"), col("_pb")).as("_tb"))
+    // probe; flipping one of the key's low k bits flips the bucket. Nulls mark
+    // skipped set bits and are filtered after the explode (a plain codegen'd
+    // filter — an array-level lambda would be interpreted).
+    val ascProbes = array(col("_key") +: (0 until k).map(i =>
+      when(col("_key").bitwiseAND(lit(1L << i)) === 0,
+        col("_key").bitwiseOR(lit(1L << i)))): _*)
+    val probed = keyed.select(col("_id"), explode(ascProbes).as("_key"))
+      .filter(col("_key").isNotNull)
     // probe direction no longer implies id order, so orientation is by
     // least/greatest and self-pairs are excluded with =!=
     val candidates = probed.as("x").join(keyed.as("y"),
-        col("x._tb") === col("y._tb") && col("x._id") =!= col("y._id"))
+        col("x._key") === col("y._key") && col("x._id") =!= col("y._id"))
       .select(least(col("x._id"), col("y._id")).as("a"),
         greatest(col("x._id"), col("y._id")).as("b"))
     // the verify uses the NATIVE CosineSim expression (one fused loop): the
@@ -283,10 +258,7 @@ object SimilarityOps {
     // cosine filter typically keeps a tiny fraction — re-verifying a few
     // duplicates costs codegen'd flops, the up-front exchange costs a full
     // shuffle of the widest intermediate (measured 1.0s of q34's 2.5s).
-    val vecs = emb.select(col("_id"), col("_v"))
-    candidates
-      .join(vecs.select(col("_id"), col("_v").as("_va")), col("a") === col("_id")).drop("_id")
-      .join(vecs.select(col("_id"), col("_v").as("_vb")), col("b") === col("_id")).drop("_id")
+    LshCandidates.attach(candidates, "a", "b", emb, emb)
       .withColumn("cosine", cosine_sim(col("_va"), col("_vb")))
       .filter(col("cosine") >= threshold)
       .select(col("a"), col("b"), round(col("cosine"), 4).as("cosine"))

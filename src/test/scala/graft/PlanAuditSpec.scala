@@ -145,9 +145,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val pairs =
       try {
         val p = ops.DedupOps.nearDupPairs(docs, "text", "doc_id", 0.5)
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-        Thread.sleep(200) // allow any EXTRA construction-time jobs to surface
+        awaitCount(math.min(jobs.get(), 1).toLong, Some(1L)) // at least 1 job
+        awaitCount(jobs.get().toLong) // allow any EXTRA construction-time jobs to surface
         p
       } finally spark.sparkContext.removeSparkListener(listener)
     // construction runs exactly ONE job — the localCheckpoint materialization
@@ -174,10 +173,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       df.collect() // finalize THIS df's adaptive plan (count() would execute a different one)
       val s = planString(df)
       assert(s.contains("ReusedExchange"), s.take(3000))
-      // exactly ONE real _block exchange; the other join side is the reuse
+      // exactly ONE real _key exchange; the other join side is the reuse
       // (line-anchored: the ReusedExchange line itself names the original)
       val shuffles = s.linesIterator.count(
-        _.dropWhile(!_.isLetter).startsWith("Exchange hashpartitioning(_block"))
+        _.dropWhile(!_.isLetter).startsWith("Exchange hashpartitioning(_key"))
       assert(shuffles == 1, s"expected 1 corpus shuffle, got $shuffles:\n${s.take(3000)}")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -186,6 +185,15 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
         case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
     }
+  }
+
+  test("q31 band self-join filters the key count from below: singleton keys never join") {
+    // LshCandidates.selfJoin claims the cap window's key count also drops
+    // one-member keys (they cannot yield an a < b pair) before the self-join:
+    // the count filter must bound the key size from BOTH sides
+    val s = planString(SparkEntry.queries("q31_near_dup_pairs")(spark, sf))
+    val filter = "Filter .*\\(_bsize#(\\d+)L >= 2\\) AND \\(_bsize#\\1L <= 8192\\)".r
+    assert(filter.findFirstIn(s).nonEmpty, s"no two-sided key-count filter:\n${s.take(4000)}")
   }
 
   test("duplicated-span stats explode the corpus ONCE (window attach, not a gram join)") {
@@ -233,9 +241,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
         // them again.
         val p = ops.SimilarityOps.embeddingNearDupPairs(
           emb, "embedding", "vec_id", threshold = 0.9, approxRows = 300)
-        val deadline = System.nanoTime() + 10e9.toLong
-        while (jobs.get() < 2 && System.nanoTime() < deadline) Thread.sleep(20)
-        Thread.sleep(200) // allow any EXTRA construction-time jobs to surface
+        awaitCount(math.min(jobs.get(), 2).toLong, Some(2L)) // at least 2 jobs
+        awaitCount(jobs.get().toLong) // allow any EXTRA construction-time jobs to surface
         p
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() <= 3,

@@ -367,27 +367,70 @@ class DedupOpsSpec extends AnyFunSuite with SparkTestBase {
   test("bucket caps bound degenerate keys: no quadratic blowup, diagnosable") {
     val s = spark
     import s.implicits._
-    // 300 token-identical docs (one degenerate band bucket) + normal docs
-    val degenerate = (0 until 300).map(i => (5000000L + i, "same same same tokens here"))
+    // each path gets 300 identical rows (every key of that row is one
+    // degenerate bucket) next to the normal corpus, with maxBucketSize = 100.
+    // Per path: the capped join leaks no degenerate pair, its pairs among the
+    // normal rows equal the uncapped join's (the cap dropped nothing else),
+    // and the diagnostic lists EXACTLY the degenerate row's keys, derived here
+    // independently of the join's key code.
+    def pairSet(df: org.apache.spark.sql.DataFrame, lo: Long) =
+      df.filter(col("a") < lo && col("b") < lo).select(col("a"), col("b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def keySet(over: org.apache.spark.sql.DataFrame) = {
+      val rows = over.collect()
+      assert(rows.forall(_.getLong(1) >= 300), rows.mkString(","))
+      rows.map(_.getLong(0)).toSet
+    }
+
+    // MinHash bands: without the cap the degenerate key alone yields
+    // 300*299/2 = 44850 pairs
+    val text = "same same same tokens here"
+    val degenerate = (0 until 300).map(i => (5000000L + i, text))
     val all = docs.select(col("doc_id"), col("text"))
       .unionByName(degenerate.toDF("doc_id", "text"))
     val capped = DedupOps.nearDupPairs(all, "text", "doc_id",
       threshold = 0.5, maxBucketSize = 100)
-    // without the cap the degenerate key alone yields 300*299/2 = 44850 pairs
     val degeneratePairs = capped.filter(col("a") >= 5000000L).count()
     assert(degeneratePairs == 0, s"degenerate bucket leaked $degeneratePairs pairs")
-    val oversized = DedupOps.oversizedBands(all, "text", maxBucketSize = 100)
-    assert(oversized.count() > 0) // the skew IS visible to the operator
-    // same shape for the embedding path
+    assert(pairSet(capped, 5000000L) ==
+      pairSet(DedupOps.nearDupPairs(all, "text", "doc_id", threshold = 0.5), 5000000L))
+    val bands = graft.text.TextHash.bandKeys(graft.text.TextHash.minhash(text, 64, 3), 8).toSet
+    assert(keySet(DedupOps.oversizedBands(all, "text", maxBucketSize = 100)) == bands)
+
+    // SimHash/dHash fingerprints: block t of fp packs as (t << 32) | block
+    val fp = 0x0123456789abcdefL
+    val fps = docs.select(col("doc_id"), graft.functions.splitmix64(col("doc_id")).as("fp"))
+      .unionByName(spark.range(7000000L, 7000300L)
+        .select(col("id").as("doc_id"), lit(fp).as("fp")))
+    val cappedFp = DedupOps.fingerprintNearDupPairs(fps, "fp", "doc_id",
+      maxHamming = 3, maxBucketSize = 100)
+    assert(cappedFp.filter(col("a") >= 7000000L).count() == 0)
+    assert(pairSet(cappedFp, 7000000L) ==
+      pairSet(DedupOps.fingerprintNearDupPairs(fps, "fp", "doc_id", maxHamming = 3), 7000000L))
+    val blocks = (0 until 4).map(t => (t.toLong << 32) | ((fp << (t * 16)) >>> 48)).toSet
+    assert(keySet(LshCandidates.oversized(
+      DedupOps.fingerprintKeys(fps, "fp", "doc_id", maxHamming = 3), 100)) == blocks)
+
+    // embedding buckets: the diagnostic's default k is the join's (planesFor
+    // over the row count); table t's bucket packs as (t << 24) | bucket
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val massDup = emb.limit(1).select(col("embedding")).crossJoin(
       spark.range(6000000L, 6000300L).toDF("vec_id")).select(col("vec_id"), col("embedding"))
-    val allEmb = emb.select(col("vec_id"), col("embedding")).unionByName(massDup)
-    val cappedEmb = graft.ops.SimilarityOps.embeddingNearDupPairs(
+    val allEmb = emb.select(col("vec_id"), col("embedding")).unionByName(massDup).cache()
+    val cappedEmb = SimilarityOps.embeddingNearDupPairs(
       allEmb, "embedding", "vec_id", threshold = 0.999, maxBucketSize = 100)
     assert(cappedEmb.filter(col("a") >= 6000000L).count() == 0)
-    val over = graft.ops.SimilarityOps.oversizedBuckets(allEmb, "embedding",
-      nPlanes = 8, nTables = 2, maxBucketSize = 100)
-    assert(over.count() > 0)
+    assert(pairSet(cappedEmb, 6000000L) == pairSet(SimilarityOps.embeddingNearDupPairs(
+      allEmb, "embedding", "vec_id", threshold = 0.999), 6000000L))
+    val k = SimilarityOps.planesFor(allEmb.count())
+    val v = allEmb.filter(col("vec_id") === 6000000L)
+      .select(transform(col("embedding"), x => x.cast("double")).as("v"))
+    val dim = SimilarityOps.embeddingDim(allEmb, "embedding")
+    val buckets = v.select((0 until 4).map(t => SimilarityOps.lshBucket(col("v"),
+      SimilarityOps.lshPlanes(k, dim, seed = t.toLong * 0x9e37L))): _*).head()
+    val embKeys = (0 until 4).map(t => (t.toLong << 24) | buckets.getInt(t)).toSet
+    assert(keySet(SimilarityOps.oversizedBuckets(allEmb, "embedding", maxBucketSize = 100)) ==
+      embKeys)
+    allEmb.unpersist()
   }
 }
