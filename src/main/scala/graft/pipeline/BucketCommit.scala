@@ -89,19 +89,28 @@ object BucketCommit {
       .partitionBy(BucketCol)
       .parquet(path)
 
+  /** One writer per bucket: a rebalance exchange hashed on the bucket puts
+    * each bucket in one task, so a small bucket lands as one file instead of
+    * one file per input task (each file is a separate commit). AQE splits a
+    * bucket larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * into advisory-size files and merges tiny partitions, so a hot bucket is
+    * never pushed through a single task. */
+  def clustered(df: DataFrame): DataFrame = df.hint("rebalance", col(BucketCol))
+
   /**
    * Commits every bucket of `bucketed` not in `done`, one fixed group at a
    * time: the group's write, then its lineage rows from the read-back.
    * `rowKey` is the per-row line the digest sorts and hashes; `counts` are
    * extra named per-bucket aggregates (0 for an empty bucket); `layout`
-   * shapes a group's rows before the write. `onGroup(k, n, buckets)` runs
-   * after the k-th of this run's n group commits. `failAfterGroups` is the
-   * crash hook: throw after that many commits while groups remain.
+   * shapes a group's rows before the write (default: `clustered`).
+   * `onGroup(k, n, buckets)` runs after the k-th of this run's n group
+   * commits. `failAfterGroups` is the crash hook: throw after that many
+   * commits while groups remain.
    */
   def commit(bucketed: DataFrame, tablePath: String, lineagePath: String, runId: String,
              nBuckets: Int, commitGroups: Int, done: Set[Int], rowKey: Column,
              counts: Seq[(String, Column)] = Nil,
-             layout: DataFrame => DataFrame = identity,
+             layout: DataFrame => DataFrame = clustered,
              failAfterGroups: Option[Int] = None,
              onGroup: (Int, Int, Seq[Int]) => Unit = (_, _, _) => ()): Unit = {
     val spark = bucketed.sparkSession

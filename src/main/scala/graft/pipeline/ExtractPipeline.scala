@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{extract_doc, is_pdf, pdf_preflight, text_digest, url_host}
@@ -199,7 +199,7 @@ object ExtractPipeline {
    * Full run with checkpoint-resume. Output layout under `outDir`:
    *   extracted/bucket=K/...parquet   (one dir per logical bucket)
    *   lineage/...parquet              (appended per run)
-   *   quarantine/...parquet
+   *   quarantine/bucket=K/...parquet  (clustered: one writer per bucket)
    *
    * Resume: buckets already present in lineage (status=committed) are
    * filtered away (reference archive-dedup anti-join analog,
@@ -207,6 +207,19 @@ object ExtractPipeline {
    * interrupted run recomputes only missing buckets (FIXTURES.md invariant 4).
    */
   def run(spark: SparkSession, pages0: DataFrame, outDir: String, cfg: Config): RunResult = {
+    val metrics = new MetricsListener
+    spark.sparkContext.addSparkListener(metrics)
+    // removed on every exit: a crashed run (failAfterGroups, a task failure)
+    // must not leave its listener tallying the session's later jobs
+    val result =
+      try commitRun(spark, pages0, outDir, cfg)
+      finally spark.sparkContext.removeSparkListener(metrics)
+    metrics.write(spark, cfg.runId, s"$outDir/metrics")
+    result
+  }
+
+  private def commitRun(spark: SparkSession, pages0: DataFrame, outDir: String,
+                        cfg: Config): RunResult = {
     val t0 = System.nanoTime()
     // empty-password recovery is a per-row payload rewrite ahead of the
     // validate/extract plan — undecryptable payloads pass through unchanged
@@ -225,10 +238,7 @@ object ExtractPipeline {
     val lineagePath = s"$outDir/lineage"
     val quarantinePath = s"$outDir/quarantine"
     val jobsPath = s"$outDir/jobs"
-    val metricsPath = s"$outDir/metrics"
     val auditPath = s"$outDir/audit"
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
 
     // A12 audit log (database_manager.py:122-150): events buffer driver-side
     // and flush as parquet appends at durability points (after each group
@@ -269,10 +279,21 @@ object ExtractPipeline {
       audit("resume", "info", s"${done.size} bucket(s) already committed; recomputing only the rest")
 
     val (valid, quarantine) = validate(pages, cfg)
-    if ((0 until cfg.nBuckets).exists(b => !done(b)))
-      BucketCommit.overwrite(
-        if (done.isEmpty) quarantine else quarantine.filter(!col(BucketCol).isin(done.toSeq: _*)),
-        quarantinePath)
+    // the quarantine count comes from the write itself (an Observation on the
+    // written frame), never from relisting the table this run just wrote. It
+    // is observed above the rebalance exchange, in the write's result stage:
+    // Spark applies a result task's metric once per partition, whereas every
+    // successful attempt of a retried or speculative map task would count
+    val quarantinedNow =
+      if ((0 until cfg.nBuckets).forall(done)) 0L // no write: Observation.get would block
+      else {
+        val written = Observation()
+        val todo =
+          if (done.isEmpty) quarantine else quarantine.filter(!col(BucketCol).isin(done.toSeq: _*))
+        BucketCommit.overwrite(
+          BucketCommit.clustered(todo).observe(written, count(lit(1)).as("n")), quarantinePath)
+        written.get("n").asInstanceOf[Long]
+      }
 
     val (toProcess0, skipped) = modeFilter(valid, cfg.mode)
     val all = extract(toProcess0, cfg).unionByName(passThroughSkipped(skipped, cfg))
@@ -330,7 +351,11 @@ object ExtractPipeline {
     val nExtracted = latest.map(_.getLong(3)).sum
     val nSkipped = latest.map(_.getLong(4)).sum
     val nErrors = latest.map(_.getLong(5)).sum
-    val q = spark.read.schema(quarantine.schema).parquet(quarantinePath).count()
+    // a resume adds the done buckets' rows: a bucket-pruned count
+    val q = quarantinedNow + (
+      if (done.isEmpty) 0L
+      else spark.read.schema(quarantine.schema).parquet(quarantinePath)
+        .filter(col(BucketCol).isin(done.toSeq: _*)).count())
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     // jobs table row (reference OCRJob analog, database_manager.py:42-84)
@@ -347,9 +372,6 @@ object ExtractPipeline {
     audit("run_complete", "info",
       s"extracted=$nExtracted skipped=$nSkipped errors=$nErrors quarantined=$q snapshot=$snapshotId")
     flushAudit()
-
-    spark.sparkContext.removeSparkListener(metrics)
-    metrics.write(spark, cfg.runId, metricsPath)
 
     RunResult(
       extractedPath, lineagePath, quarantinePath, jobsPath,

@@ -106,6 +106,35 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(filterIdx > projIdx, s"filter (line $filterIdx) should be BELOW extraction project (line $projIdx):\n$plan")
   }
 
+  private def exchanges(plan: String): Seq[String] =
+    plan.linesIterator.filter(l => l.contains("Exchange ") && !l.contains("ReusedExchange")).toSeq
+
+  test("BucketCommit.clustered plans exactly one rebalance exchange on bucket") {
+    import org.apache.spark.sql.functions._
+    val rows = spark.range(0, 100, 1, 4)
+      .withColumn(pipeline.BucketCommit.BucketCol, pmod(col("id"), lit(8)).cast("int"))
+    val ex = exchanges(pipeline.BucketCommit.clustered(rows).queryExecution.executedPlan.toString)
+    assert(ex.size == 1, ex.mkString("\n"))
+    assert(ex.head.contains("hashpartitioning(bucket#") &&
+      ex.head.contains("REBALANCE_PARTITIONS_BY_COL"), ex.head)
+  }
+
+  test("extracted write: rangepartitioning(bucket, url) is the only exchange above extraction") {
+    val dir = java.nio.file.Files.createTempDirectory("plan-audit-write").toString
+    fixtures.Corpus.pages(spark, 50).write.parquet(s"$dir/pages")
+    val (_, writes) = tableWrites("metrics")(
+      pipeline.ExtractPipeline.run(spark, spark.read.parquet(s"$dir/pages"), s"$dir/out",
+        pipeline.ExtractPipeline.Config(mode = "force", runId = "audit-0")))
+    val plans = writes.collect { case ("extracted", qe) => qe.executedPlan.toString }
+    assert(plans.size == 1, writes.map(_._1))
+    val lines = plans.head.linesIterator.toList
+    val extraction = lines.indexWhere(_.toLowerCase.contains("extractdoc"))
+    assert(extraction >= 0, lines.mkString("\n"))
+    val above = exchanges(lines.take(extraction).mkString("\n"))
+    assert(above.size == 1, lines.mkString("\n"))
+    assert(above.head.contains("rangepartitioning(bucket#") && above.head.contains("url#"), above.head)
+  }
+
   test("partial aggregation (map-side combine) present in groupBy plans") {
     val s = planString(SparkEntry.queries("q01_agg_pricing")(spark, sf))
     // two HashAggregate nodes (partial + final) around the exchange

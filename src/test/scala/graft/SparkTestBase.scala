@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.Suite
 
 /** Shared local SparkSession for specs (one JVM-wide session; suites run
@@ -25,6 +28,27 @@ trait SparkTestBase { this: Suite =>
       if (now != last) { last = now; stableSince = System.nanoTime() }
     }
     last
+  }
+
+  /** Runs `run` and returns the table dir name and query execution of every
+    * parquet write it executed, in order. `last` names the run's final
+    * table: the listener bus delivers in order, so once that write is seen
+    * every earlier one has been. */
+  def tableWrites[T](last: String)(run: => T): (T, Seq[(String, QueryExecution)]) = {
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
+          .foreach(name => writes.add(name -> qe))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val res = run
+      import scala.jdk.CollectionConverters._
+      awaitCount(writes.asScala.count(_._1 == last).toLong, expected = Some(1L))
+      (res, writes.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
 

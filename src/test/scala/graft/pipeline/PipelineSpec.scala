@@ -1,17 +1,18 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkTestBase
 import graft.fixtures.{Corpus, CorpusGen}
 
 /** End-to-end pipeline invariants (FIXTURES.md §5). */
-class PipelineSpec extends AnyFunSuite with SparkTestBase {
+class PipelineSpec extends AnyFunSuite with SparkTestBase with TimeLimits {
+
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private val N = 500
 
@@ -19,26 +20,18 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val truth = Corpus.truth(N)
 
-  /** Runs one ExtractPipeline.run and returns the table dir name of every
-    * parquet write it executed, in order. The run's last write is its
-    * metrics table; the listener bus delivers in order, so once that write
-    * is seen every earlier one has been. */
-  private def tableWrites(run: => ExtractPipeline.RunResult): (ExtractPipeline.RunResult, Seq[String]) = {
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName }
-          .foreach(writes.add)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val res = run
-      import scala.jdk.CollectionConverters._
-      awaitCount(writes.asScala.count(_ == "metrics").toLong, expected = Some(1L))
-      (res, writes.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+  /** The table dir names an ExtractPipeline.run wrote, in order; its last
+    * write is the metrics table. */
+  private def extractWrites(run: => ExtractPipeline.RunResult): (ExtractPipeline.RunResult, Seq[String]) = {
+    val (res, writes) = tableWrites("metrics")(run)
+    (res, writes.map(_._1))
   }
+
+  /** Rows of a run's quarantine table, read under the validator's schema: a
+    * run that quarantines nothing writes no part files to infer one from. */
+  private def quarantineRows(res: ExtractPipeline.RunResult): Long =
+    spark.read.schema(ExtractPipeline.validate(Corpus.pages(spark, 1), ExtractPipeline.Config())._2.schema)
+      .parquet(res.quarantinePath).count()
 
   test("force mode: extracted text byte-identical to by-construction truth for every url") {
     val out = tmp()
@@ -118,6 +111,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     }.toSet
     assert(res.quarantined == badUrls.size)
     val q = spark.read.parquet(res.quarantinePath).select("url", "reasons").collect()
+    assert(q.length == res.quarantined) // observed on the write, not re-read
     q.foreach { r =>
       assert(badUrls.contains(r.getString(0)))
       assert(r.getSeq[String](1).nonEmpty)
@@ -260,10 +254,12 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
     // resume: finishes the remaining groups only — the groups are fixed
     // bucket ranges, so the rerun writes exactly the 2 uncommitted groups
-    val (res, writes) = tableWrites(
+    val (res, writes) = extractWrites(
       ExtractPipeline.run(spark, Corpus.pages(spark, N), out, cfg.copy(runId = "g2")))
     assert(res.resumedBuckets == 8)
     assert(writes.count(_ == "extracted") == 2, writes.mkString(","))
+    // the rerun observes its own quarantine write and counts the done buckets
+    assert(res.quarantined == quarantineRows(res) && res.quarantined == ref.quarantined, res)
     val rows = spark.read.parquet(res.extractedPath)
       .select("url", "text_sha256").collect().map(r => (r.getString(0), r.getString(1))).sorted
     assert(rows.toSeq == refRows.toSeq)
@@ -300,12 +296,42 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val json = CatalogIO.readSnapshotJson(spark, res.extractedPath, res.snapshotId)
     assert("\"bucket\":".r.findAllIn(json).size == 64)
 
-    val (again, writes) = tableWrites(
-      ExtractPipeline.run(spark, Corpus.pages(spark, 20), out, cfg.copy(runId = "small-1")))
+    // nothing is written, so nothing is observed: the rerun must return, not block
+    val (again, writes) = failAfter(Span(120, Seconds))(extractWrites(
+      ExtractPipeline.run(spark, Corpus.pages(spark, 20), out, cfg.copy(runId = "small-1"))))
     assert(again.resumedBuckets == 64)
-    assert(!writes.contains("extracted") && !writes.contains("lineage"), writes.mkString(","))
+    assert(!writes.contains("extracted") && !writes.contains("lineage") &&
+      !writes.contains("quarantine"), writes.mkString(","))
     assert((again.extracted, again.skipped, again.errors, again.quarantined) ==
       (res.extracted, res.skipped, res.errors, res.quarantined), again)
+    assert(again.quarantined == quarantineRows(again), again)
+  }
+
+  test("no quarantined row: the observed count is 0") {
+    // the input is a parquet scan so that validation runs in a map stage that
+    // AQE finds empty and prunes; the observation above it still reports 0
+    val s = spark
+    import s.implicits._
+    val cleanDir = tmp() + "/pages"
+    (0 until 40).map(i =>
+      graft.model.PageRow(s"http://clean$i.example/", new java.sql.Timestamp(0),
+        s"<html><body><p>page $i</p></body></html>".getBytes("UTF-8"), null, null)).toDF()
+      .write.parquet(cleanDir)
+    val none = ExtractPipeline.run(spark, spark.read.parquet(cleanDir), tmp(),
+      ExtractPipeline.Config(mode = "force", runId = "qc-0", nBuckets = 8))
+    assert(none.quarantined == 0 && quarantineRows(none) == 0, none)
+    assert(none.extracted + none.errors == 40, none)
+  }
+
+  test("a crashed run leaves no MetricsListener on the listener bus") {
+    import org.apache.spark.graftspec.ListenerBusProbe
+    val before = ListenerBusProbe.count[MetricsListener](spark.sparkContext)
+    intercept[IllegalStateException] {
+      ExtractPipeline.run(spark, Corpus.pages(spark, 100), tmp(),
+        ExtractPipeline.Config(mode = "force", runId = "leak-0", nBuckets = 8, commitGroups = 4,
+          failAfterGroups = Some(1)))
+    }
+    assert(ListenerBusProbe.count[MetricsListener](spark.sparkContext) == before)
   }
 
   test("legacy lineage (no committed_utc_ms/err_count) still resumes, compacts and summarizes") {
